@@ -94,16 +94,6 @@ class PipelineConfig:
     # 0.8 requires most of both titles' idf mass to agree — generic
     # (high-df/low-idf) token collisions top out well below it.
     strong_title_cos: float = 0.80
-    # corroboration gates, both OFF by default. Measured on the
-    # reference's 110 labeled AMiner blocks: single-coauthor-only
-    # pairs are 54% true and venue-only pairs 81% true — yet excluding
-    # them costs far more recall than it buys precision (macro
-    # P 0.89->0.90 for R 0.74->0.61; both gates: P 0.96, R 0.52)
-    # because transitive closure recovers most false merges through
-    # other paths anyway. Enable for precision-critical dedup where a
-    # false merge is costlier than a split entity.
-    exclude_single_coauthor_only: bool = False
-    exclude_venue_only: bool = False
     use_stemming: bool = True        # name_disambiguation.py:847-848
     # Jaro-Winkler/Jaccard enrichment pass (scoring.enrich_scores):
     # re-scores pairs with string-sim features and thresholds on
@@ -137,13 +127,6 @@ class PipelineConfig:
 
     # --- connected components ---
     cc_max_iterations: int = 25
-    # localCheckpoint cadence (rounds): 1 = truncate lineage eagerly
-    # every round — measured fastest in local mode (every=3 with
-    # persist() in between cost +2s/+38% on the sf0.1 flagship CC: the
-    # deeper in-between plans outweigh the saved checkpoint I/O here).
-    # On a real cluster with reliable-checkpoint-to-HDFS costs, raise
-    # it to trade plan depth for checkpoint traffic.
-    cc_checkpoint_every: int = 1
 
     # --- name-constraint channel (operators.name_constraints) ---
     # Extract the focal author's given-name signature per pub (e.g.
@@ -175,17 +158,6 @@ class PipelineConfig:
     weak_bridge_gate: bool = True
     amb_gate_bigfrac: float = 0.30
     amb_gate_min_n: int = 50
-    # In 'rare' blocks the prior is inverted: the key is nearly unique,
-    # so modest title similarity is reliable evidence. Title-only pairs
-    # with IDF-cosine >= rare_rescue_cos match in rare blocks (the
-    # global strong_title_cos bar stays for other tiers). Only applies
-    # to evidence-SPARSE blocks (see refine_richness_max). OFF (1.0)
-    # by default since round 5: the semantic cluster merge supersedes
-    # it — measured on the 114 labeled blocks, rescue-off is +0.49
-    # macro F1 with ZERO blocks regressing (michael wagner +0.28,
-    # alok gupta +0.26), and rescue hurts even with semantic_merge
-    # off (0.8181 vs 0.8154). Set < 1.0 to re-enable.
-    rare_rescue_cos: float = 1.0
 
     # --- cluster-level agglomeration (clustering.refine_clusters) ---
     # rounds of cluster-pair merging on aggregated (incl. sub-threshold)
@@ -193,9 +165,9 @@ class PipelineConfig:
     # thresholds per ambiguity tier (refine_tau_*/refine_min_edges_*).
     # ON by default since round 3, guarded by TWO auto-calibration
     # gates measured on both corpora:
-    #   1. evidence-richness gate: refine (and the rare rescue) only
-    #      run in blocks whose mean above-threshold match score is
-    #      below refine_richness_max. Dense-evidence corpora (the
+    #   1. evidence-richness gate: refine only runs in blocks whose
+    #      mean above-threshold match score is below
+    #      refine_richness_max. Dense-evidence corpora (the
     #      synthetic fixtures: mean matched score 0.63-0.70) have
     #      complete evidence, so sub-threshold pairs there are true
     #      negatives and refine would over-merge (P 1.0 -> 0.48
@@ -212,12 +184,6 @@ class PipelineConfig:
     refine_min_edges_rare: int = 1
     refine_min_edges_common: int = 2
     refine_min_edges_amb: int = 2
-    # legacy single-threshold knobs (used when tier columns are absent,
-    # e.g. refine_clusters called standalone without block traits)
-    cluster_merge_tau: float = 0.10
-    # a cluster-pair merge additionally needs >= this many distinct
-    # cross pair-edges (corroboration; 1 disables the gate).
-    cluster_merge_min_edges: int = 2
 
     # --- corpus-internal semantic channel (operators.semantic) ---
     # Word2Vec trained on the corpus's OWN title+venue token sequences
@@ -281,6 +247,9 @@ class PipelineConfig:
     # regresses ji zhang -0.056; pair-level semantic edges measured
     # dead: post-pipeline cross-cluster zero-evidence pairs are only
     # ~24% same-author even at doc-cos >= 0.6).
+    # Also measured: semantic_merge_rounds=3 is a no-op (the 2-round
+    # fixpoint already converges) and mutual singleton margin 0.25
+    # regresses (0.8397, precision bleed) — 0.30 stands.
     semantic_merge_rounds: int = 2
     semantic_merge_mutual_margin: float = 0.15
     semantic_merge_mutual_margin_singleton: float = 0.30
@@ -289,16 +258,6 @@ class PipelineConfig:
     semantic_merge_mutual_floor_common: float = 0.65
     semantic_merge_mutual_floor_amb: float = 0.55
     semantic_merge_maxdoc_theta_amb: float = 0.92
-    # maxdoc in COMMON-tier blocks (window [maxdoc_floor, theta_common)
-    # = [0.60, 0.80)): same member-pair rescue as the amb tier.
-    # Measured round 5 on the 114 labeled blocks: 0.95 AND 0.92 are
-    # strict no-ops (macro F1 stays 0.8398 to 4 decimals — no
-    # common-tier centroid pair in the window carries a >=0.92 member
-    # pair), so the rule stays disabled (2.0) for this tier. Also
-    # measured in the same batch: semantic_merge_rounds=3 is a no-op
-    # (the 2-round fixpoint already converges) and mutual singleton
-    # margin 0.25 regresses (0.8397, precision bleed) — 0.30 stands.
-    semantic_merge_maxdoc_theta_common: float = 2.0
     semantic_merge_maxdoc_floor: float = 0.60
     w2v_dim: int = 100
     w2v_window: int = 8           # must span the appended venue tokens

@@ -98,34 +98,15 @@ def connected_components(
         )
         return nonstar.isEmpty()
 
-    # Lineage-truncation cadence: localCheckpoint every
-    # cc_checkpoint_every rounds (the expensive eager materialization
-    # to local disk); in-between rounds persist() in memory — the
-    # star-forest probe is the materializing action, so no round is
-    # recomputed, but the plan only resets at the cadence. Cuts
-    # checkpoint I/O ~k-fold while keeping the plan depth bounded at
-    # k join-rounds.
-    every = max(1, config.cc_checkpoint_every)
-    prev_persisted = None
+    # Every round truncates lineage with an eager localCheckpoint
+    # (measured fastest in local mode: persisting in between and
+    # checkpointing every 3rd round cost +38% on the sf0.1 flagship CC,
+    # the deeper in-between plans outweighing the saved checkpoint I/O).
     if not _is_star_forest(cur):  # degenerate inputs converge at once
-        for it in range(config.cc_max_iterations):
+        for _ in range(config.cc_max_iterations):
             stars = _canon(_large_star(cur))
-            nxt = _canon(_small_star(stars))
-            is_ckpt_round = (it + 1) % every == 0
-            if is_ckpt_round:
-                nxt = nxt.localCheckpoint(eager=True)
-            else:
-                nxt = nxt.persist()
-            # ONE action per round: the star-forest probe also
-            # materializes the persisted frame
-            done = _is_star_forest(nxt)
-            if prev_persisted is not None:
-                prev_persisted.unpersist()
-                prev_persisted = None
-            if not is_ckpt_round:
-                prev_persisted = nxt
-            cur = nxt
-            if done:
+            cur = _canon(_small_star(stars)).localCheckpoint(eager=True)
+            if _is_star_forest(cur):
                 break
 
     # At fixpoint every edge is (node -> component root).
@@ -213,8 +194,8 @@ def two_phase_components(
 def refine_clusters(
     clustered: DataFrame,
     scored: DataFrame,
+    traits: DataFrame,
     config: PipelineConfig = DEFAULT_CONFIG,
-    traits: DataFrame | None = None,
 ) -> DataFrame:
     """Cluster-level agglomeration — the distributed analogue of the
     reference's per-block average-linkage GHAC stage (G8,
@@ -227,8 +208,9 @@ def refine_clusters(
     are collectively strong. So: aggregate ALL scored pair evidence
     (including sub-threshold pairs) across each cluster pair,
     average-linkage-normalize, and merge cluster pairs whose affinity
-    clears ``cluster_merge_tau``; merging is one more (tiny) CC run on
-    the cluster graph, so chains merge transitively within the round.
+    clears the block tier's threshold; merging is one more (tiny) CC
+    run on the cluster graph, so chains merge transitively within the
+    round.
 
       affinity(A, B) = sum(pair scores between A and B)
                        / min(|A|, |B|)
@@ -236,32 +218,27 @@ def refine_clusters(
     min-normalization = "per member of the smaller cluster, how much
     aggregate evidence points across" — a mega-cluster cannot swallow a
     small one on volume alone. CAVEAT: the statistic still grows with
-    EVIDENCE DENSITY, not just match probability, so
-    ``cluster_merge_tau`` is corpus-dependent — 0.10 is the measured
-    peak on the sparse AMiner corpus but over-merges the dense
-    synthetic fixtures badly; hence rounds defaults to 0 (see config).
-    ``cluster_merge_min_edges`` adds a corroboration floor. Everything
-    is hash aggregation on (block, cluster_a, cluster_b) — bounded by
-    the scored-pair count, never n^2 in cluster sizes. Repeats
-    ``config.cluster_refine_rounds`` times (sizes/affinities recomputed
-    each round); new cluster id = min member cluster id, preserving the
-    min-pub-id convention.
+    EVIDENCE DENSITY, not just match probability, so a fixed threshold
+    is corpus-dependent — 0.10 is the measured peak on the sparse
+    AMiner corpus but over-merges the dense synthetic fixtures badly;
+    hence the richness gate below. Everything is hash aggregation on
+    (block, cluster_a, cluster_b) — bounded by the scored-pair count,
+    never n^2 in cluster sizes. Repeats ``config.cluster_refine_rounds``
+    times (sizes/affinities recomputed each round; the caller skips
+    the call when it is 0); new cluster id = min member cluster id,
+    preserving the min-pub-id convention.
 
-    With ``traits`` (block_key, tier, gated, sparse — see
-    plans.pipeline.build_match_context), refinement is auto-calibrated
+    ``traits`` (block_key, tier, gated, sparse — see
+    plans.pipeline.build_match_context) auto-calibrates refinement
     (round 3, the density-aware defaults that let rounds default on):
     - only evidence-SPARSE blocks participate (richness gate; dense
       corpora's sub-threshold pairs are true negatives — measured
       fixture collapse P 1.0 -> 0.48 without this),
     - merge thresholds are per ambiguity tier
-      (config.refine_tau_* / refine_min_edges_*),
+      (config.refine_tau_* / refine_min_edges_* corroboration floor),
     - evidence rows flagged ``sig_cut`` (name-constraint contradiction)
       never count, and ``is_weak`` rows don't count in gated blocks.
-    Without traits the legacy single-threshold knobs apply
-    (cluster_merge_tau / cluster_merge_min_edges) over raw scores.
     """
-    if config.cluster_refine_rounds <= 0:
-        return clustered
     e = scored
     if "sig_cut" in e.columns:
         e = e.where(~F.col("sig_cut"))
@@ -282,37 +259,26 @@ def refine_clusters(
                 & (F.col("w_org") <= 0)
             )
         )
-    if traits is not None:
-        tr = traits.select("block_key", "tier", "gated", "sparse")
-        e = e.join(tr, "block_key", "inner").where(F.col("sparse"))
-        if "is_weak" in e.columns:
-            e = e.where(~(F.col("gated") & F.col("is_weak")))
-        tau_col = (
-            F.when(F.col("tier") == "rare", F.lit(config.refine_tau_rare))
-            .when(F.col("tier") == "common", F.lit(config.refine_tau_common))
-            .otherwise(F.lit(config.refine_tau_amb))
+    tr = traits.select("block_key", "tier", "gated", "sparse")
+    e = e.join(tr, "block_key", "inner").where(F.col("sparse"))
+    if "is_weak" in e.columns:
+        e = e.where(~(F.col("gated") & F.col("is_weak")))
+    tau_col = (
+        F.when(F.col("tier") == "rare", F.lit(config.refine_tau_rare))
+        .when(F.col("tier") == "common", F.lit(config.refine_tau_common))
+        .otherwise(F.lit(config.refine_tau_amb))
+    )
+    me_col = (
+        F.when(F.col("tier") == "rare", F.lit(config.refine_min_edges_rare))
+        .when(
+            F.col("tier") == "common", F.lit(config.refine_min_edges_common)
         )
-        me_col = (
-            F.when(
-                F.col("tier") == "rare",
-                F.lit(config.refine_min_edges_rare),
-            )
-            .when(
-                F.col("tier") == "common",
-                F.lit(config.refine_min_edges_common),
-            )
-            .otherwise(F.lit(config.refine_min_edges_amb))
-        )
-        e = e.select(
-            "block_key", "id_a", "id_b", "score",
-            tau_col.alias("_tau"), me_col.alias("_me"),
-        )
-    else:
-        e = e.select(
-            "block_key", "id_a", "id_b", "score",
-            F.lit(config.cluster_merge_tau).alias("_tau"),
-            F.lit(config.cluster_merge_min_edges).alias("_me"),
-        )
+        .otherwise(F.lit(config.refine_min_edges_amb))
+    )
+    e = e.select(
+        "block_key", "id_a", "id_b", "score",
+        tau_col.alias("_tau"), me_col.alias("_me"),
+    )
     # The evidence frame is re-joined EVERY round — materialize it once
     # so each round costs one join+agg, not a re-execution of the whole
     # scoring subtree (plan depth was the round-2 OOM risk).

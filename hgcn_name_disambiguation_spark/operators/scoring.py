@@ -33,7 +33,7 @@ def fuse_scores(
       coauthor_sig = min(1, w_coauthor)        (>=1 shared coauthor)
       title_sig    = title_cos                 (IDF-weighted cosine,
                                                scale-free — see
-                                               candidate_pairs.title_edges)
+                                               candidate_pairs.combined_edges)
       venue_sig    = min(1, w_venue)           (same venue)
       org_sig      = min(1, w_org)             (same affiliation string;
                                                engine extension — the
@@ -138,7 +138,7 @@ def match_flags(
     differently; ``threshold_matches`` keeps the row-filter form):
 
     - ``is_match``: same predicate as ``threshold_matches`` (tau +
-      strong-title rescue + corroboration gates).
+      strong-title rescue).
     - ``is_weak``: the pair's evidence is venue-only in fused terms —
       no coauthor, no org, and title cosine below the strong bar. Weak
       matches clear tau only through the venue term; under the
@@ -146,20 +146,6 @@ def match_flags(
     """
     cond = F.col(score_col) > config.match_threshold
     have = set(scored.columns)
-    if {"w_coauthor", "w_venue", "w_org", "title_cos"} <= have:
-        no_title = F.col("title_cos") <= 0
-        no_other = (F.col("w_venue") <= 0) & (F.col("w_org") <= 0)
-        if config.exclude_single_coauthor_only:
-            solo_co = (F.col("w_coauthor") == 1) & no_other & no_title
-            cond = cond & ~solo_co
-        if config.exclude_venue_only:
-            solo_ve = (
-                (F.col("w_venue") > 0)
-                & (F.col("w_coauthor") <= 0)
-                & (F.col("w_org") <= 0)
-                & no_title
-            )
-            cond = cond & ~solo_ve
     if "title_cos" in have:
         strong = F.col("title_cos") >= config.strong_title_cos
         if "w_title" in have:
@@ -188,13 +174,6 @@ def threshold_matches(
     IDF-cosine is strong (>= strong_title_cos): pubs connected by
     nothing but a rare-token title match still belong together, and
     the fused weight (1/10) alone can never lift them over tau.
-
-    Corroboration gates (config.exclude_single_coauthor_only /
-    exclude_venue_only): evidence signatures whose measured precision
-    on the reference's labeled corpus is too low for transitive
-    closure (one false edge merges two whole entities) are excluded
-    even when the fused score clears tau — see config for the
-    measured numbers.
 
     The strong-title rescue requires >= min_title_overlap shared
     tokens (w_title is zeroed below that bound): a single shared token

@@ -136,7 +136,8 @@ def document_vectors(
     (block_key, pub_id, vec ARRAY<DOUBLE>) — pubs with no in-vocab
     title token get NULL (callers treat NULL as "no semantic
     evidence"). idf(tok) = ln(N_corpus / (1 + df_corpus(tok))) —
-    CORPUS-wide df, unlike the per-block idf of title_edges: semantic
+    CORPUS-wide df, unlike the per-block idf of the title channel
+    (candidate_pairs.combined_edges): semantic
     generality of a word is a corpus property, not a block property.
 
     All JVM-side: explode tokens -> df agg -> join word vectors ->

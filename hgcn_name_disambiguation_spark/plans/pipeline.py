@@ -19,10 +19,10 @@ numbers):
    contradict (operators.name_constraints),
 2. per-block ambiguity tiers (functions.names.name_tier) gate how
    weak (venue-only) evidence may act: in fragmented common-name
-   blocks it corroborates but cannot bridge components; in rare-name
-   blocks modest title similarity is accepted as a match,
-3. an evidence-richness gate turns the recall levers OFF in
-   dense-evidence corpora where they would over-merge,
+   blocks it corroborates but cannot bridge components,
+3. an evidence-richness gate turns the recall levers (cluster refine,
+   semantic merge) OFF in dense-evidence corpora where they would
+   over-merge,
 4. clustering is two-phase connected components (strong evidence
    first; weak bridges contracted), then tier-aware cluster-level
    agglomeration (clustering.refine_clusters).
@@ -71,8 +71,7 @@ class MatchContext:
     scored:  scored pairs with flag columns (is_match, is_weak,
              sig_cut) — refine reads the sub-threshold rows too.
     matches: the final match edge set (block_key, id_a, id_b, score)
-             after constraints, the ambiguity gate, and the rare-tier
-             rescue.
+             after constraints and the ambiguity gate.
     traits:  per-block (tier, gated, sparse) — drives refine.
     strong_matches: the high-evidence subset of matches (the two-phase
              CC seeds its first phase with these).
@@ -113,7 +112,7 @@ def build_match_context(
     else:
         flagged = flagged.withColumn("sig_cut", F.lit(False))
     # Materialize the flagged pair frame ONCE: every downstream branch
-    # (strong/weak/rescue splits, richness, bridges, refine evidence)
+    # (strong/weak splits, richness, bridges, refine evidence)
     # consumes it, and without truncation each action re-pays both the
     # execution AND the multi-second Catalyst planning of the full
     # scoring+constraint expression tree (measured: the planning time,
@@ -210,30 +209,8 @@ def build_match_context(
             "left_semi",
         )
     )
-    rescue = (
-        flagged.where(
-            ~F.col("sig_cut")
-            & ~F.col("is_match")
-            & (F.col("title_cos") >= F.lit(config.rare_rescue_cos))
-            # >= min_title_overlap shared tokens (w_title zeroed below):
-            # a single shared token faking a modest cosine is exactly
-            # the false-merge channel measured on xiaoyan li-type
-            # blocks — one word is never enough to merge on alone.
-            & (F.col("w_title") > 0)
-        ).join(
-            traits.where(
-                (F.col("tier") == "rare") & F.col("sparse")
-            ).select("block_key"),
-            "block_key",
-            "left_semi",
-        )
-        if config.rare_rescue_cos < 1.0
-        else flagged.where(F.lit(False))
-    )
-    matches = (
-        strong_matches.unionByName(sel(weak_kept))
-        .unionByName(sel(rescue))
-        .dropDuplicates(["block_key", "id_a", "id_b"])
+    matches = strong_matches.unionByName(sel(weak_kept)).dropDuplicates(
+        ["block_key", "id_a", "id_b"]
     )
     return MatchContext(
         flagged,
@@ -285,9 +262,7 @@ def cluster_from_context(
         .drop("node", "component", "strong_component", "_node")
     )
     if config.cluster_refine_rounds > 0:
-        clustered = refine_clusters(
-            clustered, ctx.scored, config, traits=ctx.traits
-        )
+        clustered = refine_clusters(clustered, ctx.scored, ctx.traits, config)
     if config.semantic_merge:
         clustered = _semantic_merge_stage(pubs, clustered, ctx, config)
     return clustered
@@ -329,10 +304,6 @@ def _semantic_merge_stage(
             F.col("tier") == "amb",
             F.lit(config.semantic_merge_maxdoc_theta_amb),
         )
-        .when(
-            F.col("tier") == "common",
-            F.lit(config.semantic_merge_maxdoc_theta_common),
-        )
         .otherwise(F.lit(2.0))
     )
     eligible = (
@@ -359,24 +330,6 @@ def _semantic_merge_stage(
     return semantic_cluster_merge(
         clustered, doc_vecs, sigs, eligible, config
     )
-
-
-def compute_matches(
-    pubs: DataFrame,
-    edges: DataFrame,
-    config: PipelineConfig = DEFAULT_CONFIG,
-) -> MatchContext:
-    """Back-compat alias for build_match_context."""
-    return build_match_context(pubs, edges, config)
-
-
-def cluster_matches(
-    pubs: DataFrame,
-    ctx: MatchContext,
-    config: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Back-compat alias for cluster_from_context."""
-    return cluster_from_context(pubs, ctx, config)
 
 
 def run_pipeline(

@@ -11,9 +11,9 @@ Design:
   contract; a kill mid-stage leaves no marker, so only that stage
   re-runs.
 - Every completed stage appends a lineage row: stage, rows,
-  n_partitions, per-partition row counts (skew visibility), wall
-  seconds, input fingerprints. The lineage table is itself a queryable
-  DataFrame (`runner.lineage()`).
+  n_partitions, max/min rows per partition (skew visibility), wall
+  seconds. The lineage table is itself a queryable DataFrame
+  (`runner.lineage()`).
 
 The reference has no notion of resume (a killed batch_disambiguation
 run restarts from scratch — `batch_disambiguation.py:94-101`); this is

@@ -1,6 +1,7 @@
-"""Unit tests for edge builders J1-J4 against tiny golden inputs
-(SURVEY §5.1, mirroring experimental-results/authors/*_authorlist.txt
-style fixtures)."""
+"""Unit tests for the candidate-pair channels J1-J4 of combined_edges
+against tiny golden inputs (SURVEY §5.1, mirroring
+experimental-results/authors/*_authorlist.txt style fixtures). Each
+channel is read from its own combined_edges column."""
 
 import json
 
@@ -10,10 +11,7 @@ from pyspark.sql import functions as F
 from hgcn_name_disambiguation_spark.config import PipelineConfig
 from hgcn_name_disambiguation_spark.fixtures.generator import REPO_FILES_SCHEMA
 from hgcn_name_disambiguation_spark.operators.candidate_pairs import (
-    coauthor_edges,
     combined_edges,
-    title_edges,
-    venue_edges,
 )
 from hgcn_name_disambiguation_spark.operators.parse import parse_publications
 
@@ -56,24 +54,30 @@ def tiny_pubs(spark):
     return parse_publications(_mk(spark, records)).cache()
 
 
+def _channel(edges, col):
+    """{(block_key, id_a, id_b): col} over the rows where col > 0."""
+    return {
+        (r.block_key, r.id_a, r.id_b): r[col]
+        for r in edges.where(F.col(col) > 0).collect()
+    }
+
+
 def test_coauthor_edges(tiny_pubs):
-    rows = coauthor_edges(tiny_pubs).collect()
-    got = {(r.block_key, r.id_a, r.id_b): r.w_coauthor for r in rows}
+    got = _channel(combined_edges(tiny_pubs), "w_coauthor")
     # only p1-p2 share coauthor bob roy (focal author excluded; cross-block
     # bob roy must NOT pair p1/p2 with p4)
     assert got == {("ann lee", "p1", "p2"): 1.0}
 
 
 def test_venue_edges(tiny_pubs):
-    rows = venue_edges(tiny_pubs).collect()
-    got = {(r.block_key, r.id_a, r.id_b): r.w_venue for r in rows}
+    got = _channel(combined_edges(tiny_pubs), "w_venue")
     assert got == {("ann lee", "p1", "p2"): 1.0}
 
 
 def test_title_edges_min_overlap(tiny_pubs):
-    rows = title_edges(tiny_pubs).collect()
+    rows = combined_edges(tiny_pubs).where(F.col("title_cos") > 0).collect()
     got = {(r.block_key, r.id_a, r.id_b): r.w_title for r in rows}
-    # p1-p2 share {quantum, graphene} -> weight 2; p3 shares nothing >=2
+    # p1-p2 share {quantum, graphene} -> weight 2; p3 shares no token
     assert got == {("ann lee", "p1", "p2"): 2.0}
 
 
@@ -92,7 +96,7 @@ def test_title_single_token_cos_edge(spark):
          "org": "null", "label": 0},
     ]
     pubs = parse_publications(_mk(spark, records))
-    rows = title_edges(pubs).collect()
+    rows = combined_edges(pubs).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.id_a, r.id_b) == ("r1", "r2")
@@ -106,9 +110,10 @@ def test_title_single_token_cos_edge(spark):
     scored = fuse_scores(combined_edges(pubs))
     assert threshold_matches(scored).count() == 0
 
-    # legacy behavior restorable: min_title_cos_overlap=2 drops the row
+    # legacy behavior restorable: min_title_cos_overlap=2 drops the
+    # title channel for the pair
     cfg = PipelineConfig(min_title_cos_overlap=2)
-    assert title_edges(pubs, cfg).count() == 0
+    assert combined_edges(pubs, cfg).where(F.col("title_cos") > 0).count() == 0
 
 
 def test_combined_edges_fuses_relations(tiny_pubs):
@@ -129,8 +134,33 @@ def test_hot_key_cap(spark):
     ]
     pubs = parse_publications(_mk(spark, records))
     cfg = PipelineConfig(max_venue_df_per_block=5)
-    assert venue_edges(pubs, cfg).count() == 0
-    assert venue_edges(pubs).count() == 15  # C(6,2) without cap
+    assert len(_channel(combined_edges(pubs, cfg), "w_venue")) == 0
+    # C(6,2) without cap
+    assert len(_channel(combined_edges(pubs), "w_venue")) == 15
+
+
+def test_org_edges(spark):
+    """Org channel: equal affiliations after normalization (case,
+    punctuation, whitespace) give w_org 1.0; placeholder orgs and orgs
+    of <= 3 characters are not evidence."""
+    def pub(block, pid, title, venue, org):
+        return {"block": block, "pub_id": pid, "title": title, "year": 2001,
+                "authors": [block], "venue": venue, "org": org, "label": 0}
+
+    records = [
+        pub("ann lee", "o1", "quantum lattice", "v1",
+            "Dept. of Physics, Tsinghua University"),
+        pub("ann lee", "o2", "enzyme pathways", "v2",
+            "dept of physics  TSINGHUA university!"),
+        pub("bo li", "o3", "quantum lattice", "v1", "Unknown"),
+        pub("bo li", "o4", "enzyme pathways", "v2", "unknown"),
+        pub("cy wu", "o5", "quantum lattice", "v1", "MIT"),
+        pub("cy wu", "o6", "enzyme pathways", "v2", "mit."),
+    ]
+    edges = combined_edges(parse_publications(_mk(spark, records)))
+    assert _channel(edges, "w_org") == {("ann lee", "o1", "o2"): 1.0}
+    # no other channel links any pair either
+    assert edges.count() == 1
 
 
 def test_salt_invariance(spark, fixture_repo_files):

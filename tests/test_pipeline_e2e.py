@@ -2,11 +2,21 @@
 sha256 invariant, partition property, permutation invariance
 (SURVEY §5.1; north-rule gates)."""
 
+import hashlib
+
 from pyspark.sql import functions as F
 
 from hgcn_name_disambiguation_spark.plans.pipeline import (
     run_pipeline,
     verify_content_sha,
+)
+
+
+# sha256 of the sorted (block_key, pub_id, cluster_id) rows of
+# run_pipeline(fixture_repo_files), one tab-joined line per row: any
+# change to a cluster id — not only one that moves F1 — fails the pin.
+CLUSTERED_DIGEST = (
+    "2a54d5447282481f1b371b2cda480185e7e1f36c601e87a06f1c5a0d3b35379f"
 )
 
 
@@ -38,3 +48,14 @@ def test_row_order_invariance(spark, fixture_repo_files):
     sig_a = sorted((r.block_key, r.pub_id, r.cluster_id) for r in a.collect())
     sig_b = sorted((r.block_key, r.pub_id, r.cluster_id) for r in b.collect())
     assert sig_a == sig_b
+
+
+def test_clustered_output_pinned(spark, fixture_repo_files):
+    clustered = run_pipeline(fixture_repo_files).clustered
+    rows = sorted(
+        (r.block_key, r.pub_id, r.cluster_id) for r in clustered.collect()
+    )
+    assert len(rows) == 200
+    assert len({(bk, cid) for bk, _, cid in rows}) == 31
+    text = "\n".join("\t".join(r) for r in rows)
+    assert hashlib.sha256(text.encode()).hexdigest() == CLUSTERED_DIGEST

@@ -109,8 +109,11 @@ def main(argv=None) -> int:
         overrides["match_threshold"] = args.threshold
     if args.enrich:
         overrides["enrich"] = True
+    fields = {f.name for f in dataclasses.fields(DEFAULT_CONFIG)}
     for kv in args.set:
         k, v = kv.split("=", 1)
+        if k not in fields:
+            sys.exit(f"--set: unknown PipelineConfig field {k!r}")
         cur = getattr(DEFAULT_CONFIG, k)
         overrides[k] = type(cur)(v) if not isinstance(cur, bool) else v == "true"
     cfg = dataclasses.replace(DEFAULT_CONFIG, **overrides)
@@ -286,8 +289,8 @@ def main(argv=None) -> int:
             f"Non-default PipelineConfig fields: {nd}. Effective adaptive "
             f"layer for THIS run: name_constraints="
             f"{cfg.name_constraints}, weak_bridge_gate={cfg.weak_bridge_gate}, "
-            f"rare_rescue_cos={cfg.rare_rescue_cos}, cluster_refine_rounds="
-            f"{cfg.cluster_refine_rounds}, refine taus r/c/a="
+            f"cluster_refine_rounds={cfg.cluster_refine_rounds}, "
+            f"refine taus r/c/a="
             f"{cfg.refine_tau_rare}/{cfg.refine_tau_common}/"
             f"{cfg.refine_tau_amb}, min-edges "
             f"{cfg.refine_min_edges_rare}/{cfg.refine_min_edges_common}/"
